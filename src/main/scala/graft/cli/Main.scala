@@ -1,7 +1,8 @@
 package graft.cli
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.p6._
@@ -83,6 +84,16 @@ object Main {
     sys.exit(code)
   }
 
+  /** `graft.maxRenderedIssues`: how many issue messages per level a
+    * command prints (default 50); anything but a non-negative integer
+    * is a usage error.
+    */
+  private def maxRenderedIssues(): Int = sys.props.get("graft.maxRenderedIssues") match {
+    case None => 50
+    case Some(v) => v.toIntOption.filter(_ >= 0).getOrElse(exitOrThrow(2,
+      s"graft.maxRenderedIssues must be a non-negative integer (got: $v)"))
+  }
+
   // ---------------------------------------------------------------- 3.1
   def parseExcel(o: Map[String, String]): Unit = {
     if (o.contains("--excel-path") == o.contains("--dir"))
@@ -90,6 +101,7 @@ object Main {
         "workbook) or --dir (workbook corpus) is required")
     val excel = o.getOrElse("--excel-path", o("--dir"))
     val strict = o.contains("--strict-variants")
+    val issueCap = maxRenderedIssues()
     // Resolve against graft.cwd exactly like the output dir below: the
     // default tests/data/hp.json must not silently depend on the process
     // cwd while the output path honors the override. An absolute
@@ -126,10 +138,8 @@ object Main {
     // Ontology (J1-J4) when an HPO file is available.
     val ontology: Option[Ontology] =
       if (Files.exists(hpoFile)) Some(Ontology.fromObographs(spark, hpoFile.toString))
-      else if (o.contains("--custom-hpo")) {
-        System.err.println(s"HPO file not found: $hpoFile")
-        sys.exit(1)
-      } else None
+      else if (o.contains("--custom-hpo")) exitOrThrow(1, s"HPO file not found: $hpoFile")
+      else None
 
     val mapper: TableMapper = new DefaultMapper(ontology, strict)
     val mapped = mapper.applyMapping(spark, tables.toMap)
@@ -158,23 +168,33 @@ object Main {
 
     // Bounded issues render: a pathological corpus (every row bad)
     // yields an issues DF the size of the input — never pull that onto
-    // the driver. Exact per-level counts come from a distributed
-    // aggregate (tiny result); only the first `cap` messages per level
-    // are fetched, with an "and N more" line carrying the exact
-    // remainder — same discipline as writeNumberedJson's
-    // graft.maxNumberedFiles fail-fast.
-    val issueCap = sys.props.get("graft.maxRenderedIssues").map(_.toInt)
-      .getOrElse(50)
-    val issueCounts = result.issues.groupBy("level").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the driver. The issue plan runs ONCE: exact per-level counts ride
+    // along as observed metrics, and a per-level row_number keeps the
+    // first `cap` messages (Spark's window group limit applies it per
+    // partition before the shuffle), so at most 2·cap rows are fetched,
+    // with an "and N more" line carrying the exact remainder — same
+    // discipline as writeNumberedJson's graft.maxNumberedFiles
+    // fail-fast. The plan keeps at least one row per level: a limit of
+    // 0 is optimized into an empty relation that drops the observation.
+    val counted = Observation("stat_issue_counts")
+    val shown = result.issues
+      .observe(counted, count_if(col("level") === "error").as("error"),
+        count_if(col("level") === "warning").as("warning"))
+      .filter(col("level").isin("error", "warning"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("level").orderBy("sheet", "step", "message")))
+      .filter(col("rank") <= math.max(issueCap, 1))
+      .select("level", "rank", "message")
+      .collect()
+    // no metrics only when the plan was proven empty
+    val issueCounts = counted.get
+    require(issueCounts.nonEmpty || shown.isEmpty, "issue counts were not observed")
     def renderIssues(level: String, header: String, plural: String): Unit = {
-      val n = issueCounts.getOrElse(level, 0L)
+      val n = issueCounts.get(level).fold(0L)(_.asInstanceOf[Long])
       if (n > 0) {
         println(header)
-        result.issues.filter(col("level") === level)
-          .orderBy("sheet", "step", "message")
-          .limit(issueCap)
-          .collect().foreach(r => println(s"- ${r.getAs[String]("message")}"))
+        shown.filter(r => r.getString(0) == level && r.getInt(1) <= issueCap)
+          .sortBy(_.getInt(1)).foreach(r => println(s"- ${r.getString(2)}"))
         if (n > issueCap)
           println(s"- … and ${n - issueCap} more $plural " +
             s"(cap graft.maxRenderedIssues=$issueCap)")
@@ -220,6 +240,7 @@ object Main {
       exitOrThrow(2, "audit-excel: exactly one of -e/--excel-path (single " +
         "workbook) or --dir (workbook corpus) is required")
     val excel = o.getOrElse("--excel-path", o("--dir"))
+    val cap = maxRenderedIssues()
     val spark = session()
     val corpus = readCorpus(spark, o, excel)
     // Corpus audit granularity: sheets of the same logical kind union
@@ -231,7 +252,6 @@ object Main {
       .map(_.sheets.view.mapValues(_.drop("source_file", "row_idx")).toSeq.sortBy(_._1))
       .getOrElse(readInput(spark, excel).toSeq.sortBy(_._1))
     val ingestEntries = corpus.toSeq.flatMap { c =>
-      val cap = sys.props.get("graft.maxRenderedIssues").map(_.toInt).getOrElse(50)
       val n = c.issues.count()
       val shown = c.issues.orderBy("source_file").limit(cap).collect()
         .map(r => AuditEntry("ingest-workbook",

@@ -1,7 +1,8 @@
 package graft.p6
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** The HPO ontology as two dimension tables plus a transitive-closure
   * edge set (SURVEY.md §2.6). The reference holds the ontology as an
@@ -22,46 +23,57 @@ object Ontology {
   /** Parse an obographs-format hp.json (the format served by HPO GitHub
     * releases, ref: src/P6/__main__.py:96-125) into the dimension tables.
     * Spark-native: `spark.read.json` handles .json and .json.gz alike.
+    * Terms and edges are extracted in ONE pass over the file and held
+    * as driver-parallelized frames (dimension-sized, like the driver
+    * closure), so no query over the ontology re-reads or re-parses it.
     */
   def fromObographs(spark: SparkSession, path: String): Ontology = {
     val raw = spark.read.option("multiLine", true).json(path)
     val graph = raw.select(explode(col("graphs")).as("g")).select(col("g.*"))
 
-    def shortId(c: org.apache.spark.sql.Column) =
+    def shortId(c: Column) =
       regexp_replace(regexp_extract(c, "([^/]+)$", 1), "_", ":")
+    def elementType(df: DataFrame, field: String) =
+      df.schema(field).dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
 
-    val nodes = graph.select(explode(col("nodes")).as("n")).select(col("n.*"))
-    val metaFields: Set[String] =
-      if (nodes.schema.fields.exists(_.name == "meta"))
-        nodes.select(col("meta.*")).schema.fields.map(_.name).toSet
-      else Set.empty
-    val deprecatedCol =
-      if (metaFields.contains("deprecated")) coalesce(col("meta.deprecated"), lit(false))
-      else lit(false)
-    // Replacement ids for obsolete terms (J2's alt_term_ids): obographs
-    // carries them as meta.basicPropertyValues entries with the
-    // IAO:0100001 ("term replaced by") predicate.
-    val altIdsCol =
-      if (metaFields.contains("basicPropertyValues"))
-        coalesce(
-          transform(
-            filter(col("meta.basicPropertyValues"),
-              bpv => bpv.getField("pred").endsWith("IAO_0100001")),
-            bpv => shortId(bpv.getField("val"))),
-          lit(Array.empty[String]))
-      else lit(Array.empty[String])
-    val terms = nodes
-      .select(shortId(col("id")).as("term_id"),
-        col("lbl").as("name"),
-        deprecatedCol.as("is_obsolete"),
-        altIdsCol.as("alt_ids"))
-      .filter(col("term_id").startsWith("HP:"))
+    val metaFields: Set[String] = elementType(graph, "nodes").find(_.name == "meta")
+      .map(_.dataType) match {
+        case Some(m: StructType) => m.fieldNames.toSet
+        case _ => Set.empty
+      }
+    def term(n: Column): Column = {
+      val meta = n.getField("meta")
+      val deprecated =
+        if (metaFields.contains("deprecated")) coalesce(meta.getField("deprecated"), lit(false))
+        else lit(false)
+      // Replacement ids for obsolete terms (J2's alt_term_ids): obographs
+      // carries them as meta.basicPropertyValues entries with the
+      // IAO:0100001 ("term replaced by") predicate.
+      val altIds =
+        if (metaFields.contains("basicPropertyValues"))
+          coalesce(
+            transform(
+              filter(meta.getField("basicPropertyValues"),
+                bpv => bpv.getField("pred").endsWith("IAO_0100001")),
+              bpv => shortId(bpv.getField("val"))),
+            lit(Array.empty[String]))
+        else lit(Array.empty[String])
+      struct(shortId(n.getField("id")).as("term_id"), n.getField("lbl").as("name"),
+        deprecated.as("is_obsolete"), altIds.as("alt_ids"))
+    }
+    val extracted = graph.select(
+      filter(transform(col("nodes"), term(_)), t => t.getField("term_id").startsWith("HP:"))
+        .as("terms"),
+      transform(filter(col("edges"), e => e.getField("pred") === "is_a"),
+        e => struct(shortId(e.getField("sub")).as("child"),
+          shortId(e.getField("obj")).as("parent"))).as("edges"))
+    val graphs = extracted.collect()
+    def dimension(field: String): DataFrame = parallelized(spark,
+      graphs.toSeq.flatMap(g => Option(g.getSeq[Row](g.fieldIndex(field))).getOrElse(Nil)),
+      elementType(extracted, field))
 
-    val edges = graph.select(explode(col("edges")).as("e"))
-      .filter(col("e.pred") === "is_a")
-      .select(shortId(col("e.sub")).as("child"), shortId(col("e.obj")).as("parent"))
-
-    Ontology(terms, edges, transitiveClosure(edges))
+    val edges = dimension("edges")
+    Ontology(dimension("terms"), edges, transitiveClosure(edges))
   }
 
   /** Build an ontology from in-memory rows (tests, fixtures). */
@@ -163,8 +175,8 @@ object Ontology {
     * limit; cycles, which a well-formed ontology cannot contain, are
     * broken by the in-progress mark rather than looping forever).
     */
-  private def driverClosure(spark: SparkSession, pairs: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private def driverClosure(spark: SparkSession, pairs: Array[Row],
+      schema: StructType): DataFrame = {
     import scala.collection.mutable
     val parents = mutable.HashMap.empty[Any, mutable.ArrayBuffer[Any]]
     pairs.foreach { r =>
@@ -195,16 +207,19 @@ object Ontology {
       }
     }
     val rows = parents.keysIterator.flatMap { d =>
-      memo(d).iterator.map(a => org.apache.spark.sql.Row(d, a))
+      memo(d).iterator.map(a => Row(d, a))
     }.toSeq
-    // parallelize instead of a LocalRelation: a quarter-million-row
-    // LocalRelation gets copied into every plan that references it
-    // (planning cost + task binary bloat); an RDD-backed frame is
-    // referenced, not embedded.
-    val rdd = spark.sparkContext.parallelize(rows,
-      math.max(2, spark.sparkContext.defaultParallelism / 4))
-    spark.createDataFrame(rdd, schema)
+    parallelized(spark, rows, schema)
   }
+
+  /** Driver-held, dimension-sized rows as a frame. parallelize instead
+    * of a LocalRelation: a quarter-million-row LocalRelation gets copied
+    * into every plan that references it (planning cost + task binary
+    * bloat); an RDD-backed frame is referenced, not embedded.
+    */
+  private def parallelized(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows,
+      math.max(2, spark.sparkContext.defaultParallelism / 4)), schema)
 
   /** J1-J3: per-row ontology checks on parsed phenotype records
     * (ref: src/P6/mapper.py:380-397). One broadcast left join serves all

@@ -161,27 +161,134 @@ class CliSpec extends SparkSpec {
   }
 
   test("parse-excel: issues render is capped, remainder reported with exact count") {
-    // 10 NAD rows -> 10 warning issues; with graft.maxRenderedIssues=3
-    // the render must print exactly 3 messages plus an "and 7 more"
+    // 10 NAD rows + an obsolete term -> 11 warnings; 4 unparseable
+    // cells + the obsolete term outside HP:0000118 -> 5 errors. With
+    // graft.maxRenderedIssues=3 each level prints exactly its first 3
+    // messages in (sheet, step, message) order plus an "and N more"
     // line — never collect the full issues DF onto the driver
     val dir = Files.createTempDirectory("clicap")
     val wb = dir.resolve("wb.xlsx")
     val hpo = dir.resolve("hp.json")
     val manyNad = Seq(Seq("Patient ID", "HPO: Term", "Timestamp", "Status")) ++
-      (1 to 10).map(_ => Seq("P100", "NAD", "T1", "1"))
+      (1 to 10).map(_ => Seq("P100", "NAD", "T1", "1")) ++
+      Seq("D", "B", "C", "A").map(i => Seq("P100", s"junk$i", "T1", "1")) :+
+      Seq("P100", "Old term (HP:9999)", "T1", "1")
     writeXlsx(wb, Seq("Variants" -> genotypeRows, "HPO" -> manyNad))
     writeHpoJson(hpo)
     sys.props("graft.keep-session") = "1"
+    def rendered(cap: Int): List[String] = {
+      sys.props("graft.cwd") = Files.createDirectories(dir.resolve(s"cap$cap")).toString
+      sys.props("graft.maxRenderedIssues") = cap.toString
+      val out = try stdoutOf {
+        graft.cli.Main.parseExcel(Map(
+          "--excel-path" -> wb.toString, "--custom-hpo" -> hpo.toString))
+      } finally { sys.props -= "graft.cwd"; sys.props -= "graft.maxRenderedIssues" }
+      out.linesIterator
+        .dropWhile(!_.startsWith("Errors found")).takeWhile(!_.startsWith("Created ")).toList
+    }
+    assert(rendered(3) == List(
+      "Errors found in mapping:",
+      "- Sheet 'phenotype': HP:0009999 is not a descendant of Phenotypic abnormality",
+      "- Sheet 'phenotype': Cannot parse HPO term+ID from 'junkA'",
+      "- Sheet 'phenotype': Cannot parse HPO term+ID from 'junkB'",
+      "- … and 2 more errors (cap graft.maxRenderedIssues=3)",
+      "Warnings found in mapping:",
+      "- Sheet 'phenotype': HP:0009999 is obsolete; consider replacements: HP:0000510",
+      "- Sheet 'phenotype': 'NAD' encountered - skipping phenotype row",
+      "- Sheet 'phenotype': 'NAD' encountered - skipping phenotype row",
+      "- … and 8 more warnings (cap graft.maxRenderedIssues=3)"))
+    // cap 0: counts only — the exact totals must survive the empty render
+    assert(rendered(0) == List(
+      "Errors found in mapping:",
+      "- … and 5 more errors (cap graft.maxRenderedIssues=0)",
+      "Warnings found in mapping:",
+      "- … and 11 more warnings (cap graft.maxRenderedIssues=0)"))
+  }
+
+  test("graft.maxRenderedIssues: a non-numeric or negative cap is a usage error") {
+    val dir = Files.createTempDirectory("clicapbad")
+    val wb = dir.resolve("wb.xlsx")
+    writeXlsx(wb, Seq("Variants" -> genotypeRows, "HPO" -> phenotypeRows))
+    sys.props("graft.keep-session") = "1"
     sys.props("graft.cwd") = dir.toString
-    sys.props("graft.maxRenderedIssues") = "3"
+    try for (bad <- Seq("many", "-1")) {
+      sys.props("graft.maxRenderedIssues") = bad
+      val commands = Seq[Map[String, String] => Unit](
+        graft.cli.Main.parseExcel, graft.cli.Main.auditExcel)
+      commands.foreach { command =>
+        val e = intercept[IllegalStateException] {
+          command(Map("--excel-path" -> wb.toString))
+        }
+        assert(e.getMessage ==
+          s"graft.maxRenderedIssues must be a non-negative integer (got: $bad)")
+      }
+    } finally { sys.props -= "graft.cwd"; sys.props -= "graft.maxRenderedIssues" }
+  }
+
+  test("parse-excel: a missing --custom-hpo file fails without exiting the JVM") {
+    val dir = Files.createTempDirectory("clinohpo")
+    val wb = dir.resolve("wb.xlsx")
+    writeXlsx(wb, Seq("Variants" -> genotypeRows, "HPO" -> phenotypeRows))
+    sys.props("graft.keep-session") = "1"
+    sys.props("graft.cwd") = dir.toString
+    val e = try intercept[IllegalStateException] {
+      graft.cli.Main.parseExcel(Map(
+        "--excel-path" -> wb.toString, "--custom-hpo" -> "missing/hp.json"))
+    } finally { sys.props -= "graft.cwd" }
+    assert(e.getMessage.startsWith("HPO file not found: "), e.getMessage)
+    assert(e.getMessage.endsWith("missing/hp.json"), e.getMessage)
+  }
+
+  test("parse-excel evaluates the issue plan once and reads hp.json only at load") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.graft.ListenerFlush
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("cliplans")
+    val wb = dir.resolve("wb.xlsx")
+    val hpo = dir.resolve("hp.json")
+    // issues at both levels: the obsolete term is a warning (J2) and,
+    // outside HP:0000118, a batch-validate error
+    writeXlsx(wb, Seq("Variants" -> genotypeRows,
+      "HPO" -> (phenotypeRows :+ Seq("P100", "Old term (HP:9999)", "T1", "1"))))
+    writeHpoJson(hpo)
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        executions.add(qe)
+    }
+    sys.props("graft.keep-session") = "1"
+    sys.props("graft.cwd") = dir.toString
+    ListenerFlush.flush(spark)
+    spark.listenerManager.register(listener)
     val out = try stdoutOf {
       graft.cli.Main.parseExcel(Map(
         "--excel-path" -> wb.toString, "--custom-hpo" -> hpo.toString))
-    } finally { sys.props -= "graft.cwd"; sys.props -= "graft.maxRenderedIssues" }
-    assert(out.contains("Warnings found in mapping:"))
-    val nadLines = out.linesIterator.count(_.contains("'NAD' encountered"))
-    assert(nadLines == 3, s"expected 3 rendered NAD warnings, got $nadLines:\n$out")
-    assert(out.contains("and 7 more warnings"), out)
+    } finally {
+      ListenerFlush.flush(spark)
+      spark.listenerManager.unregister(listener)
+      sys.props -= "graft.cwd"
+    }
+    assert(out.contains("Errors found in mapping:") && out.contains("Warnings found in mapping:"))
+    val qes = scala.jdk.CollectionConverters.IteratorHasAsScala(executions.iterator())
+      .asScala.toList
+    // the analyzed plan names every step of the issue plan an execution
+    // starts from; the optimizer may prune the step column away
+    val issuePlans = qes.count { qe =>
+      val text = qe.analyzed.toString
+      text.contains("ontology-check") || text.contains("batch-validate")
+    }
+    assert(issuePlans == 1, s"issue plan evaluated $issuePlans times")
+    val hpoReads = qes.count(_.optimizedPlan.exists {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.exists(_.getName == "hp.json")
+        case _ => false
+      }
+      case _ => false
+    })
+    assert(hpoReads == 1, s"$hpoReads SQL executions read hp.json")
   }
 
   test("parse-excel --legacy-names: files named by patient id, not 1.json..N.json") {
@@ -329,6 +436,23 @@ class CliSpec extends SparkSpec {
       .collect()(0)
     assert(!live.getAs[Boolean]("is_obsolete"))
     assert(live.getSeq[String](live.fieldIndex("alt_ids")).isEmpty)
+  }
+
+  test("fromObographs: the loaded ontology no longer reads hp.json") {
+    val dir = Files.createTempDirectory("obogone")
+    val hpo = dir.resolve("hp.json")
+    writeHpoJson(hpo)
+    val ont = graft.p6.Ontology.fromObographs(spark, hpo.toString)
+    val session = spark
+    import session.implicits._
+    val phenotypes = Seq("HP:0000001", "HP:0000478", "HP:0000510", "HP:0009999", "HP:0001234")
+      .toDF("HPO_ID")
+    def checks() = (graft.p6.Ontology.termChecks(ont, phenotypes).collect().toSet,
+      graft.p6.Ontology.batchValidate(ont, phenotypes).collect().toSet)
+    val before = checks()
+    assert(before._1.size == 2 && before._2.size == 4, before)
+    Files.delete(hpo)
+    assert(checks() == before)
   }
 
   test("download: file:// base URL fetch (offline mirror of ref test_download_mock)") {
